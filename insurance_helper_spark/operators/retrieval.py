@@ -15,16 +15,24 @@ Fusion: Reciprocal Rank Fusion, score = sum 1/(60+rank) over legs
 (Cormack et al.), fused top-n returned with both leg ranks (0 = not in
 that leg's top-20).
 
-Scale stance: tf rows exist only for the query's <=8 terms (left-semi
-pushdown into the posting build); df/avgdl are tiny broadcast
-aggregates; the vector leg broadcasts ONE query vector and scans
-embeddings once. Each leg is cut to depth 20 by ``orderBy().limit()``
-— Spark plans that as TakeOrderedAndProject (per-partition top-k,
-merged in one final task), never a global sort — and only the <=20
-survivors pass through the rank-assignment window, so no window ever
-sees a corpus-sized partition (ADVICE r10). No all-pairs joins;
-nothing corpus-sized is ever collected (the Rocchio centroid collects
-3 rows).
+Scale stance: the corpus side is staged ONCE per session per
+``sf_dir`` as a retrieval index (``queries.shared_cache.memo_checkpoint``,
+session-temp parquet), over the documents that have embeddings:
+posting rows (term, doc_id, tf, bm25) with stopwords dropped and the
+query-independent BM25 term weight precomputed (so document count and
+average length are computed once, at build time); the embeddings as
+``array<double>``; and the 80-char snippet per document. A request
+then runs only small jobs against the index: a filter of the postings
+on its <=8 query terms and the BM25 top-20; a cosine scan of the
+staged embeddings against the query vector, passed as a literal, and
+the cosine top-20; the RRF fusion of the two <=20-row legs in
+Python; and a broadcast join of the <=``topn`` fused rows to the
+staged snippets. Each leg is cut by ``orderBy().limit()``, which Spark
+plans as TakeOrderedAndProject (per-partition top-k, one merge task),
+never a global sort. Nothing corpus-sized is collected: <=20 rows per
+leg, one document's terms, <=3 feedback vectors. Like the other
+``shared_cache`` relations, the index is valid while the source tables
+are unchanged within a session; a new session rebuilds it.
 
 Reference parity: Stage-3 "semantic search / RAG querying"
 (/root/reference/README.md:103-137) exposed at the reference's only
@@ -34,18 +42,81 @@ user surface, the CLI (/root/reference/src/irdai_scraper/cli.py).
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from insurance_helper_spark.functions import text as T
 from insurance_helper_spark.operators.similarity import cosine
+from insurance_helper_spark.queries.shared_cache import memo_checkpoint
 from insurance_helper_spark.sources.tables import load_table
 
 RRF_K = 60
 MAX_QUERY_TERMS = 8
 LEG_DEPTH = 20
 FEEDBACK_DOCS = 3  # Rocchio pseudo-relevance depth for free-text queries
+
+
+class RetrievalIndex(NamedTuple):
+    postings: DataFrame  # term, doc_id, tf, bm25 (term weight x 1e9, long)
+    vectors: DataFrame  # doc_id, seq, vv
+    snippets: DataFrame  # doc_id, snippet
+
+
+def retrieval_index(spark: SparkSession, sf_dir: str) -> RetrievalIndex:
+    """The staged retrieval index for ``sf_dir``: built on the first
+    call in a session, read back from session-temp parquet after."""
+
+    def embedded_docs() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
+        ids = load_table(spark, sf_dir, "embeddings", columns=["vec_id"])
+        return docs.join(ids.select(F.col("vec_id").alias("doc_id")), "doc_id")
+
+    def build_postings() -> DataFrame:
+        corpus = embedded_docs().select("doc_id", T.tokens(F.col("text")).alias("toks"))
+        totals = corpus.agg(
+            F.count("*").cast("long").alias("n_docs"),
+            (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
+        )
+        tf = (
+            corpus.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
+            .filter(~F.col("term").isin(*T.EN_STOPWORDS))
+            .groupBy("term", "doc_id", "dl")
+            .agg(F.count("*").cast("long").alias("tf"))
+            .withColumn("df", F.count("*").over(W.partitionBy("term")).cast("long"))
+        )
+        k1, b = 1.2, 0.75
+        idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+        denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+        return tf.crossJoin(F.broadcast(totals)).select(
+            "term",
+            "doc_id",
+            "tf",
+            F.round(idf * F.col("tf") * (k1 + 1) / denom * 1e9).cast("long").alias("bm25"),
+        )
+
+    def build_vectors() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"])
+        # seq keeps the table's scan order: the Rocchio centroid sums its
+        # feedback vectors in that order, so the doubles stay exact.
+        return emb.select(
+            F.col("vec_id").alias("doc_id"),
+            F.monotonically_increasing_id().alias("seq"),
+            F.col("embedding").cast("array<double>").alias("vv"),
+        )
+
+    def build_snippets() -> DataFrame:
+        return embedded_docs().select(
+            "doc_id",
+            F.substring(F.regexp_replace("text", r"\s+", " "), 1, 80).alias("snippet"),
+        )
+
+    return RetrievalIndex(
+        memo_checkpoint(spark, ("retrieval_postings", sf_dir), build_postings),
+        memo_checkpoint(spark, ("retrieval_vectors", sf_dir), build_vectors),
+        memo_checkpoint(spark, ("retrieval_snippets", sf_dir), build_snippets),
+    )
 
 
 def _query_terms_from_text(query: str) -> list[str]:
@@ -70,27 +141,14 @@ def hybrid_rrf_retrieve(
     Exactly one of ``query`` / ``doc_id`` must be given."""
     if (query is None) == (doc_id is None):
         raise ValueError("pass exactly one of query= or doc_id=")
-    k1, b = 1.2, 0.75
-
-    docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vv")
-    )
-    corpus = (
-        docs.join(emb.select(F.col("vec_id").alias("doc_id")), "doc_id")
-        .select("doc_id", T.tokens(F.col("text")).alias("toks"))
-        .localCheckpoint(eager=True)  # feeds dl/totals/tf (+ q-terms for doc_id mode)
-    )
+    index = retrieval_index(spark, sf_dir)
 
     if doc_id is not None:
         qterm_rows = (
-            corpus.where(F.col("doc_id") == doc_id)
-            .select(F.explode("toks").alias("term"))
-            .filter(~F.col("term").isin(*T.EN_STOPWORDS))
-            .groupBy("term")
-            .agg(F.count("*").alias("tf"))
+            index.postings.where(F.col("doc_id") == doc_id)
             .orderBy(F.desc("tf"), "term")
             .limit(MAX_QUERY_TERMS)
+            .select("term")
             .collect()
         )
         terms = [r["term"] for r in qterm_rows]
@@ -101,94 +159,69 @@ def hybrid_rrf_retrieve(
         if not terms:
             raise ValueError("query has no indexable terms after tokenization")
 
-    qterms = spark.createDataFrame([(t,) for t in terms], "term string")
-    dl = corpus.select("doc_id", F.size("toks").alias("dl"))
-    totals = corpus.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
-    )
-    tf = (
-        corpus.select("doc_id", F.explode("toks").alias("term"))
-        .join(F.broadcast(qterms), "term", "left_semi")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    dft = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    denom = F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    term_score = F.round(idf * F.col("tf") * (k1 + 1) / denom * 1e9).cast("long")
-    lex_base = (
-        tf.join(F.broadcast(dft), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-    )
+    postings = index.postings.where(F.col("term").isin(*terms))
+    vectors = index.vectors
     if doc_id is not None:
-        lex_base = lex_base.filter(F.col("doc_id") != doc_id)
-    # orderBy().limit() plans as TakeOrderedAndProject — per-partition
-    # top-k then one merge task; the row_number window only ever sees
-    # the <= LEG_DEPTH survivors (never the full candidate set).
-    w_lex = W.orderBy(F.desc("bm4"), "doc_id")
-    lex = (
-        lex_base.groupBy("doc_id")
-        .agg(F.round(F.sum(term_score).cast("double") / 1e9, 4).alias("bm4"))
+        postings = postings.where(F.col("doc_id") != doc_id)
+        vectors = vectors.where(F.col("doc_id") != doc_id)
+    lex_rows = (
+        postings.groupBy("doc_id")
+        .agg(F.round(F.sum("bm25").cast("double") / 1e9, 4).alias("bm4"))
         .orderBy(F.desc("bm4"), "doc_id")
         .limit(LEG_DEPTH)
-        .withColumn("lex_rank", F.row_number().over(w_lex))
-        .select("doc_id", "lex_rank")
-        .localCheckpoint(eager=True)  # reused: vec leg feedback + fusion
+        .collect()
     )
+    lex_rank = {r["doc_id"]: i + 1 for i, r in enumerate(lex_rows)}
 
     if doc_id is not None:
-        qv_rows = emb.where(F.col("vec_id") == doc_id).select("vv").collect()
+        qv_rows = index.vectors.where(F.col("doc_id") == doc_id).select("vv").collect()
         qv = qv_rows[0]["vv"] if qv_rows else None
     else:
         # Rocchio pseudo-relevance: centroid of the top feedback docs
-        fb = [r["doc_id"] for r in lex.orderBy("lex_rank").limit(FEEDBACK_DOCS).collect()]
-        vecs = emb.where(F.col("vec_id").isin(fb)).select("vv").collect() if fb else []
+        fb = [r["doc_id"] for r in lex_rows[:FEEDBACK_DOCS]]
+        vecs = (
+            index.vectors.where(F.col("doc_id").isin(fb)).select("seq", "vv").collect()
+            if fb else []
+        )
+        vecs = [r["vv"] for r in sorted(vecs, key=lambda r: r["seq"])]
         if vecs:
-            dim = len(vecs[0]["vv"])
-            qv = [sum(v["vv"][i] for v in vecs) / len(vecs) for i in range(dim)]
+            qv = [sum(v[i] for v in vecs) / len(vecs) for i in range(len(vecs[0]))]
         else:
             qv = None
 
+    vec_rank: dict[int, int] = {}
     if qv is not None:
-        qvec = spark.createDataFrame([(qv,)], "va array<double>")
-        w_vec = W.orderBy(F.desc("cos6"), "doc_id")
-        vec_base = emb.select(F.col("vec_id").alias("doc_id"), F.col("vv").alias("vb"))
-        if doc_id is not None:
-            vec_base = vec_base.filter(F.col("doc_id") != doc_id)
-        vec = (
-            vec_base.crossJoin(F.broadcast(qvec))
-            .select("doc_id", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos6"))
+        vec_rows = (
+            vectors.select("doc_id", F.round(cosine(F.lit(qv), F.col("vv")), 6).alias("cos6"))
             .orderBy(F.desc("cos6"), "doc_id")
             .limit(LEG_DEPTH)
-            .withColumn("vec_rank", F.row_number().over(w_vec))
-            .select("doc_id", "vec_rank")
+            .collect()
         )
-    else:
-        vec = spark.createDataFrame([], "doc_id bigint, vec_rank int")
+        vec_rank = {r["doc_id"]: i + 1 for i, r in enumerate(vec_rows)}
 
-    fused = lex.join(vec, "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce(F.col("lex_rank"), F.lit(0)).cast("long").alias("lex_rank"),
-        F.coalesce(F.col("vec_rank"), F.lit(0)).cast("long").alias("vec_rank"),
-        (
-            F.when(F.col("lex_rank").isNotNull(), F.lit(1.0) / (RRF_K + F.col("lex_rank"))).otherwise(F.lit(0.0))
-            + F.when(F.col("vec_rank").isNotNull(), F.lit(1.0) / (RRF_K + F.col("vec_rank"))).otherwise(F.lit(0.0))
-        ).alias("rrf_score"),
+    def rrf(d: int) -> float:
+        # 1/(60+lex) + 1/(60+vec) in that order, an absent leg adding
+        # 0.0: the doubles the catalog twin's fusion produces
+        lex = 1.0 / (RRF_K + lex_rank[d]) if d in lex_rank else 0.0
+        vec = 1.0 / (RRF_K + vec_rank[d]) if d in vec_rank else 0.0
+        return lex + vec
+
+    fused = sorted(set(lex_rank) | set(vec_rank), key=lambda d: (-rrf(d), d))[: max(topn, 0)]
+    top = spark.createDataFrame(
+        [(i + 1, d, rrf(d), lex_rank.get(d, 0), vec_rank.get(d, 0)) for i, d in enumerate(fused)],
+        "rank int, doc_id bigint, rrf_score double, lex_rank bigint, vec_rank bigint",
     )
-    w_f = W.orderBy(F.desc("rrf_score"), "doc_id")
     return (
-        fused.withColumn("rank", F.row_number().over(w_f))
-        .filter(F.col("rank") <= topn)
-        .join(docs, "doc_id")
+        F.broadcast(top)
+        .join(index.snippets.where(F.col("doc_id").isin(fused)), "doc_id")
         .select(
             "rank",
             "doc_id",
             F.round("rrf_score", 6).alias("rrf_score"),
             "lex_rank",
             "vec_rank",
-            F.substring(F.regexp_replace("text", r"\s+", " "), 1, 80).alias("snippet"),
+            "snippet",
         )
         .orderBy("rank")
+        .limit(len(fused))  # TakeOrderedAndProject: no range-partitioning sort
     )

@@ -29,6 +29,11 @@ Keyed by applicationId so a stopped-and-restarted session can never
 read another session's staging directory; directories are removed at
 interpreter exit (best-effort — they live under tempfile.gettempdir()
 regardless).
+
+Thread-safe: client threads sharing one session may ask for the same
+key at once; a per-key lock makes exactly one of them build and
+publish the relation while the others wait for it, so no thread reads
+a directory another is overwriting.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ import os
 import re
 import shutil
 import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 _CACHE: dict = {}
 _STAGE_DIRS: dict[str, str] = {}
 _COUNTS: dict = {}
+_LOCK = threading.Lock()  # guards _KEY_LOCKS and _STAGE_DIRS
+_KEY_LOCKS: dict = {}
 
 
 def keep_ids(spark: SparkSession) -> set:
@@ -57,11 +65,12 @@ def keep_ids(spark: SparkSession) -> set:
 
 
 def _stage_dir(app_id: str) -> str:
-    d = _STAGE_DIRS.get(app_id)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="ihs_staged_")
-        _STAGE_DIRS[app_id] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    with _LOCK:
+        d = _STAGE_DIRS.get(app_id)
+        if d is None:
+            d = tempfile.mkdtemp(prefix="ihs_staged_")
+            _STAGE_DIRS[app_id] = d
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
 
@@ -72,25 +81,31 @@ def memo_checkpoint(
     ``build()`` and publishing it to session-temp parquet on first use
     in this session. Later calls return a reader over the staged files
     (explicit schema — no footer inference, works even for an empty
-    relation)."""
+    relation). Concurrent callers of one key wait for a single build."""
     app_id = spark.sparkContext.applicationId
     full_key = (app_id,) + tuple(key)
     cached = _CACHE.get(full_key)
     if cached is not None:
         return cached
-    # The readable slug is LOSSY (('a b','c') and ('a','b c') both
-    # sanitize to 'a_b_c'); the appended digest of the raw key tuple
-    # makes the directory injective in the key, so two distinct memos
-    # can never overwrite each other's files (ADVICE r13).
-    import hashlib
+    with _LOCK:
+        key_lock = _KEY_LOCKS.setdefault(full_key, threading.Lock())
+    with key_lock:
+        cached = _CACHE.get(full_key)
+        if cached is not None:
+            return cached
+        # The readable slug is LOSSY (('a b','c') and ('a','b c') both
+        # sanitize to 'a_b_c'); the appended digest of the raw key tuple
+        # makes the directory injective in the key, so two distinct memos
+        # can never overwrite each other's files (ADVICE r13).
+        import hashlib
 
-    slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", "_".join(str(p) for p in key))
-    digest = hashlib.sha1(repr(key).encode()).hexdigest()[:8]
-    path = os.path.join(_stage_dir(app_id), f"{slug}_{digest}")
-    built = build()
-    built.write.mode("overwrite").parquet(path)
-    df = spark.read.schema(built.schema).parquet(path)
-    _CACHE[full_key] = df
+        slug = re.sub(r"[^A-Za-z0-9_.-]+", "_", "_".join(str(p) for p in key))
+        digest = hashlib.sha1(repr(key).encode()).hexdigest()[:8]
+        path = os.path.join(_stage_dir(app_id), f"{slug}_{digest}")
+        built = build()
+        built.write.mode("overwrite").parquet(path)
+        df = spark.read.schema(built.schema).parquet(path)
+        _CACHE[full_key] = df
     return df
 
 

@@ -183,6 +183,20 @@ def _decode_stream(raw: bytes, header: bytes) -> bytes | None:
     return data
 
 
+def _stream_bodies(raw: bytes) -> list[bytes]:
+    """Candidate stream bodies for the bytes between 'stream' and one
+    'endstream': ``raw`` less the single end-of-line marker (CRLF, LF or
+    CR) the PDF syntax puts before 'endstream'. Only that marker is
+    stripped — a Flate body may itself end in 0x0A or 0x0D. When the
+    marker reads as CRLF, the body may instead end in CR with an LF
+    marker, so that split is the second candidate."""
+    if raw.endswith(b"\r\n"):
+        return [raw[:-2], raw[:-1]]
+    if raw.endswith((b"\n", b"\r")):
+        return [raw[:-1]]
+    return [raw]
+
+
 def extract_pdf_text(content: bytes) -> tuple[str, int]:
     """Best-effort text + page count from a PDF blob. Raises
     ``PdfExtractError`` when nothing decodable carries text."""
@@ -213,11 +227,11 @@ def extract_pdf_text(content: bytes) -> tuple[str, int]:
         # occurrence before giving up on the stream (ADVICE r9).
         data = None
         end = content.find(b"endstream", start)
-        while end >= 0:
-            body = content[start:end].rstrip(b"\r\n")
-            data = _decode_stream(body, header)
-            if data is not None:
-                break
+        while data is None and end >= 0:
+            for body in _stream_bodies(content[start:end]):
+                data = _decode_stream(body, header)
+                if data is not None:
+                    break
             end = content.find(b"endstream", end + 1)
         if data is None:
             continue

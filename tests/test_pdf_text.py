@@ -165,3 +165,36 @@ def test_page_count_regex_fallback_without_pages_root():
     assert b"/Count" not in pdf
     _, n_pages = extract_pdf_text(pdf)
     assert n_pages == 3  # per-page census still works root-less
+
+
+def _flate_body_ending_in(last: int) -> tuple[bytes, bytes]:
+    """(content, zlib body) whose compressed body's last byte is
+    ``last``. That byte is the low byte of the Adler-32 sum A of the
+    content, so it depends on the content alone, not on the zlib build."""
+    for i in range(20000):
+        content = b"BT (stream body %d) Tj ET" % i
+        body = zlib.compress(content)
+        if body[-1] == last:
+            return content, body
+    raise AssertionError("no content found")
+
+
+@pytest.mark.parametrize("eol", [b"\n", b"\r\n", b"\r"])
+@pytest.mark.parametrize("last", [0x0A, 0x0D])
+def test_flate_body_ending_in_eol_byte(last, eol):
+    """Only the one end-of-line marker before 'endstream' is stripped:
+    a Flate body whose own last byte is LF or CR must still inflate,
+    whichever marker the writer used."""
+    content, body = _flate_body_ending_in(last)
+    pdf = b"".join(
+        [
+            b"%PDF-1.4\n",
+            b"10 0 obj\n<< /Type /Page /Parent 2 0 R >>\nendobj\n",
+            b"2 0 obj\n<< /Type /Pages /Count 1 >>\nendobj\n",
+            b"100 0 obj\n<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(body),
+            body,
+            eol + b"endstream\nendobj\n%%EOF\n",
+        ]
+    )
+    text, _ = extract_pdf_text(pdf)
+    assert text.strip() == content[4:-7].decode()

@@ -262,3 +262,36 @@ class TestRetrievePlans:
         plan = audit.executed_plan(df)
         assert "BatchEvalPython" not in plan
         assert "CartesianProduct" not in plan
+
+    def test_warm_request_reads_the_staged_index(self, spark, sf_dir, tmp_path, monkeypatch):
+        """The corpus side is built once per session per sf_dir: a second
+        request over the same tables runs no index build, and its plan
+        keeps the hygiene above (a fresh copy of the tables gives a
+        key no earlier test has built)."""
+        import shutil
+
+        from insurance_helper_spark.operators import retrieval
+        from insurance_helper_spark.plans import audit
+
+        for table in ("documents", "embeddings"):
+            shutil.copy(f"{sf_dir}/{table}.parquet", tmp_path / f"{table}.parquet")
+        builds = []
+        memo = retrieval.memo_checkpoint
+
+        def counting_memo(spark, key, build):
+            def counted():
+                builds.append(key[0])
+                return build()
+
+            return memo(spark, key, counted)
+
+        monkeypatch.setattr(retrieval, "memo_checkpoint", counting_memo)
+        cold = retrieval.hybrid_rrf_retrieve(spark, str(tmp_path), doc_id=3, topn=5)
+        assert sorted(builds) == ["retrieval_postings", "retrieval_snippets", "retrieval_vectors"]
+        warm = retrieval.hybrid_rrf_retrieve(spark, str(tmp_path), query="window merge scan", topn=5)
+        assert len(builds) == 3
+        assert cold.count() == warm.count() == 5
+        plan = audit.executed_plan(warm)
+        assert "BatchEvalPython" not in plan
+        assert "CartesianProduct" not in plan
+        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan

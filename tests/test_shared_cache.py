@@ -5,6 +5,10 @@ they replace. Plus the adaptive SRP plane-count math (r12)."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+
 from pyspark.sql import functions as F
 
 from insurance_helper_spark.operators import dedup
@@ -61,6 +65,41 @@ class TestMemoContract:
         b = SC.memo_checkpoint(spark, ("t_once", SF_DIR), build)
         assert a is b and calls == [1]
         assert a.count() == 5
+
+    def test_concurrent_callers_build_once(self, spark):
+        """Client threads sharing a session that miss the memo for one
+        key together must not each build and overwrite the staged
+        directory: build() runs once and every caller gets the same
+        relation. More threads than cores, a short switch interval and
+        a build held open widen the window a lost check-then-act needs."""
+        n = 8
+        calls = []
+        results: list = [None] * n
+        barrier = threading.Barrier(n)
+
+        def build():
+            calls.append(1)
+            time.sleep(0.5)
+            return SC.doc_shingles(spark, SF_DIR).limit(5)
+
+        def ask(i):
+            barrier.wait(timeout=60)
+            results[i] = SC.memo_checkpoint(spark, ("t_concurrent", SF_DIR), build)
+
+        old_interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=ask, args=(i,)) for i in range(n)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(old_interval)
+        assert not any(t.is_alive() for t in threads)
+        assert calls == [1]
+        assert all(r is results[0] for r in results)
+        assert results[0].count() == 5
 
     def test_corpus_count_memoized(self, spark):
         n1 = SC.corpus_count(spark, SF_DIR, "embeddings")
